@@ -1,14 +1,23 @@
 """CrawlEngine: the per-round DAG + resumable state (SURVEY.md §3.4, §7).
 
-One round = one declarative DataFrame DAG::
+A round (:meth:`CrawlEngine.run_round`) is four phases::
 
-    frontier scan → latest-attempt → anti-join resolved (seen ∪ dead)
-      → robots + budget gate (broadcast hosts)
-      → salt-local + per-host priority top-k          (selection)
-      → (host, salt) repartition → fetch/parse UDF    (the only Python)
-      → link extraction (native) → first-wins anti-join vs frontier
-      → state appends: resolved, documents, frontier
-      → lineage row                                    (commit marker)
+    _select   frontier rows due this round whose (url_sha, attempt)
+              slot is unresolved (frontier.unresolved; bloom-prefiltered
+              once the resolved set is large) → robots + budget gate
+              (broadcast hosts) → salt-local + per-host priority top-k.
+              Lazy: nothing executes yet.
+    _stage    (host, salt) repartition → fetch/parse UDF (the only
+              Python) → ONE disposition-partitioned staging write.
+              Selection executes inside this job; the round's counters
+              ride it as an Observation.
+    _publish  state appends from the staging dir: resolved + documents
+              adopt staged partitions zero-copy; new links (first-wins
+              anti-join vs frontier) + retry rows append to the
+              frontier while the bloom delta shards build.
+    _commit   bloom absorb, exact counter deltas, then the lineage row
+              (the commit marker). A zero-work round publishes nothing
+              and commits the same way.
 
 State tables (all append-only snapshot tables):
 
@@ -38,9 +47,11 @@ from __future__ import annotations
 import datetime as _dt
 import hashlib
 import os
-import time
+import shutil
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from news_crawler_spark import schemas
@@ -58,10 +69,6 @@ from news_crawler_spark.crawl.fetch import (
 )
 from news_crawler_spark.tables import SnapshotTable
 
-RETRYABLE = (503, -1)  # reference retry.py triggers; informational only —
-# the attempt cap applies to EVERY non-ok/non-404 status (an unknown
-# status must not retry unboundedly)
-
 
 def url_priority_col(seed: int, url_col: str = "url") -> F.Column:
     """Native twin of fixtures.sitegen.url_priority: first 15 hex chars
@@ -71,11 +78,21 @@ def url_priority_col(seed: int, url_col: str = "url") -> F.Column:
     return (F.pmod(u60, F.lit(100000)).cast("double") / F.lit(100000.0))
 
 
+def _discovered(urls: DataFrame, priority: F.Column, round_no: int) -> DataFrame:
+    """Frontier rows for newly discovered URLs: first attempt, due at once."""
+    return enrich_candidates(urls).select(
+        "url", "url_hash", "url_sha", "host", "path",
+        priority.alias("priority"),
+        F.lit(round_no).alias("discovered_round"),
+        F.lit(0).alias("attempt"),
+        F.lit(0).alias("not_before"),
+    )
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, state_dir: str, hosts: DataFrame,
                  fetcher: Fetcher, seed: int = 42, max_attempts: int = 3,
-                 n_salts: int = 8, use_bloom: bool = True,
-                 bloom_shards: int = 16, bloom_min_resolved: int = 2_000_000,
+                 use_bloom: bool = True, bloom_min_resolved: int = 2_000_000,
                  retry_jitter_span: int = 0, compact_ratio: float = 4.0,
                  compact_min_resolved: int = 100_000,
                  archive_dir: str | None = None,
@@ -86,8 +103,7 @@ class CrawlEngine:
         self.seed = seed
         self.max_attempts = max_attempts
         self.retry_jitter_span = retry_jitter_span
-        self.n_salts = n_salts
-        self.bloom = BloomShards(n_shards=bloom_shards) if use_bloom else None
+        self.bloom = BloomShards() if use_bloom else None
         self._bloom_bc = None
         # below this resolved-set size the exact anti-join beats the
         # probe's Arrow round trip (measured in-sandbox); the shards are
@@ -122,7 +138,6 @@ class CrawlEngine:
         self.next_round = 0
         self._seen_xor = 0
         self._seen_n = 0
-        self.last_timings: dict[str, float] = {}
 
     # -- views over resolved ----------------------------------------------
     def url_seen_df(self) -> DataFrame:
@@ -152,15 +167,9 @@ class CrawlEngine:
         budget; read-only over the resolved table."""
         from news_crawler_spark.crawl.traps import trap_signals
 
-        urls = self.resolved.read().select(
-            "host",
-            F.coalesce(
-                F.nullif(
-                    F.regexp_extract("url", r"^https?://[^/]+(/.*)$", 1),
-                    F.lit("")),
-                F.lit("/"),
-            ).alias("path"))
-        return trap_signals(urls, ratio_threshold=ratio_threshold,
+        urls = enrich_candidates(self.resolved.read().select("url"))
+        return trap_signals(urls.select("host", "path"),
+                            ratio_threshold=ratio_threshold,
                             min_urls=min_urls)
 
     def plan_budgets(self, total_budget: int, floor: int = 1) -> DataFrame:
@@ -204,9 +213,7 @@ class CrawlEngine:
         # into a different partition count, and byte-identical rewrite
         # only holds per segment — stale part files from a wider
         # attempt would otherwise duplicate records on read
-        import shutil as _shutil
-
-        _shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
         flat = flatten_text(ok_rows.select("doc_id", "spans"))
         recs = flat.select(
             F.col("doc_id").alias("url"),
@@ -220,27 +227,14 @@ class CrawlEngine:
     # -- lifecycle --------------------------------------------------------
     def init(self, seeds: DataFrame) -> None:
         """Install the seed list (url, priority) as frontier round -1."""
-        rows = seeds.select(
-            "url",
-            F.xxhash64("url").alias("url_hash"),
-            F.sha2(F.col("url"), 256).alias("url_sha"),
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
-            F.coalesce(
-                F.nullif(F.regexp_extract("url", r"^https?://[^/]+(/.*)$", 1), F.lit("")),
-                F.lit("/"),
-            ).alias("path"),
-            F.col("priority").cast("double"),
-            F.lit(0).alias("discovered_round"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).alias("not_before"),
-        )
-        self.frontier.append(rows)
+        self.frontier.append(
+            _discovered(seeds, F.col("priority").cast("double"), 0))
         self._frontier_rows = self.frontier.read().count()
-        self._commit_lineage(-1, 0, 0, 0, 0, "")
+        self._commit_lineage(-1, 0, 0, 0, 0)
         self.next_round = 0
 
     def _commit_lineage(self, round_no: int, scheduled: int, ok: int,
-                        errors: int, new_urls: int, bloom_digest: str) -> None:
+                        errors: int, new_urls: int) -> None:
         # driver-side write (SnapshotTable.append_rows): one record per
         # round does not justify scheduling a Spark job — the job/task
         # round trip was a measurable per-round fixed cost that the
@@ -250,7 +244,7 @@ class CrawlEngine:
               self.frontier.current_snapshot(),
               self.resolved.current_snapshot(),
               self.documents.current_snapshot(),
-              bloom_digest,
+              self._state_digest(),
               _dt.datetime.now(_dt.timezone.utc).isoformat())])
 
     def resume(self) -> int:
@@ -259,6 +253,8 @@ class CrawlEngine:
         Returns the next round to run. Any appends from a round whose
         lineage row never committed are rolled back (never replayed
         partially) — the kill/resume invariant of SURVEY.md §7.2 M5.
+        Raises if the rebuilt URL-seen set or bloom shards disagree
+        with the lineage row's digest.
         """
         rows = self.lineage.read().orderBy(F.col("round").desc()).limit(1).collect()
         if not rows:
@@ -268,28 +264,31 @@ class CrawlEngine:
         self.resolved.rollback(last.resolved_snapshot)
         self.documents.rollback(last.documents_snapshot)
         self._rebuild_seen_digest()
-        # exact compaction counters (one count + one semi-join job,
-        # resume-only — never per-round)
+        # exact compaction counters (two count jobs, resume-only —
+        # never per-round): every frontier row's slot is either
+        # resolved or not
         self._frontier_rows = self.frontier.read().count()
-        self._resolved_in_frontier = (
-            self.frontier.read()
-            .join(self.resolved.read().select("url_sha", "attempt"),
-                  ["url_sha", "attempt"], "left_semi")
-            .count()
-        )
+        self._resolved_in_frontier = self._frontier_rows - (
+            frontier_ops.unresolved(self.frontier.read(), self.resolved.read())
+            .count())
         if self.bloom is not None:
             self._rebuild_bloom()
-            committed = last.bloom_digest.split(":")[-1] if last.bloom_digest else ""
-            if committed and committed != self.bloom.digest():
+        # "seen:bloom" halves; an empty half (state written before the
+        # digest existed, or with the bloom off) is not checked
+        committed = last.bloom_digest.partition(":")[::2]
+        rebuilt = self._state_digest().partition(":")[::2]
+        for name, c, b in zip(("URL-seen", "bloom shard"), committed, rebuilt):
+            if c and b and c != b:
                 raise RuntimeError(
-                    "bloom shard digest mismatch after rebuild — resolved "
+                    f"{name} digest mismatch after rebuild — resolved "
                     "table and lineage row disagree (torn state?)")
         self.next_round = last["round"] + 1
         return self.next_round
 
     # -- pending: the scale-critical anti-join, bloom-prefiltered ---------
     def _pending(self, round_no: int) -> DataFrame:
-        pend0 = self.frontier.read().filter(F.col("not_before") <= F.lit(round_no))
+        due = self.frontier.read().filter(F.col("not_before") <= F.lit(round_no))
+        resolved = self.resolved.read()
         # the probe pays off only while it can actually prune: its
         # benefit is the join-input rows it removes (the definite
         # negatives ≈ the unresolved fraction of the frontier), its
@@ -302,29 +301,17 @@ class CrawlEngine:
         frac_resolved = self._resolved_in_frontier / max(1, self._frontier_rows)
         if (self.bloom is None or self._resolved_n < self.bloom_min_resolved
                 or frac_resolved > 0.7):
-            return pend0.join(self.resolved.read().select("url_sha", "attempt"),
-                              ["url_sha", "attempt"], "left_anti")
+            return frontier_ops.unresolved(due, resolved)
         if self._bloom_bc is None:
-            self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
-        probed = split_by_bloom(pend0, self._bloom_bc)
+            self._broadcast_bloom()
+        probed = split_by_bloom(due, self._bloom_bc)
         negatives = probed.filter(F.col("bloom_neg")).drop("bloom_neg")
-        positives = (
-            probed.filter(~F.col("bloom_neg")).drop("bloom_neg")
-            .join(self.resolved.read().select("url_sha", "attempt"),
-                  ["url_sha", "attempt"], "left_anti")
-        )
+        positives = frontier_ops.unresolved(
+            probed.filter(~F.col("bloom_neg")).drop("bloom_neg"), resolved)
         return negatives.unionByName(positives)
 
-    def _bloom_absorb_blobs(self, blobs: list) -> None:
-        """OR this round's distributed-built delta shards into the live
-        set; regrow (full distributed rebuild at 4x) if any shard
-        passed capacity. Only shard blobs ever reach the driver."""
-        if self.bloom is None:
-            return
-        self.bloom.absorb_blobs(blobs)
-        if self.bloom.needs_regrow():
-            self._rebuild_bloom(capacity=self.bloom.capacity * 4)
-            return  # rebuild already rebroadcast
+    def _broadcast_bloom(self) -> None:
+        """Ship the live shard set to the probe, replacing the last one."""
         if self._bloom_bc is not None:
             self._bloom_bc.destroy()
         self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
@@ -337,14 +324,11 @@ class CrawlEngine:
         only the fixed-size blobs come back to the driver — at 10^10
         resolved slots the keys (~80 GB) never leave the executors.
         """
-        cap = capacity or (self.bloom.capacity if self.bloom else 1 << 20)
-        self.bloom = BloomShards(n_shards=self.bloom.n_shards, capacity=cap)
+        self.bloom = BloomShards(capacity=capacity or self.bloom.capacity)
         self.bloom.absorb_blobs(
             build_shard_blobs(self.resolved.read().select("url_hash", "attempt"),
                               self.bloom.n_shards, self.bloom.m_bits))
-        if self._bloom_bc is not None:
-            self._bloom_bc.destroy()
-        self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
+        self._broadcast_bloom()
 
     def _retry_gap_col(self) -> F.Column:
         """Exponential backoff in round units (reference utils/retry.py:
@@ -362,23 +346,30 @@ class CrawlEngine:
             gap = gap + F.pmod(u60, F.lit(self.retry_jitter_span + 1))
         return gap
 
-    # -- the round DAG ----------------------------------------------------
+    # -- the round: four phases --------------------------------------------
     def run_round(self, round_no: int | None = None) -> dict:
         r = self.next_round if round_no is None else round_no
-        t0 = time.perf_counter()
-        self._maybe_compact()
-        selected = frontier_ops.select_candidates(self._pending(r), self.hosts)
-        fetched = fetch_round(selected, self.fetcher, n_salts=self.n_salts)
-        t = {"_select_build": round(time.perf_counter() - t0, 3)}
+        staging, counts = self._stage(r, self._select(r))
+        n_new, blobs = self._publish(r, staging, counts["n"])
+        return self._commit(r, counts, n_new, blobs)
 
-        # ONE pass over the fetch UDF: its output lands directly in a
-        # disposition-partitioned staging parquet dir. Everything
-        # downstream reads staged columns (spans pruned away unless
-        # needed), and the ok-partition is adopted zero-copy as the
-        # documents append — no memory-cache serialization of fat span
-        # rows, no second spans write. Round counters ride the same
-        # write as an Observation (CollectMetrics) — no second agg job.
-        t1 = time.perf_counter()
+    def _select(self, r: int) -> DataFrame:
+        """Phase 1: the round's fetch set with per-host ``seq``. Lazy —
+        it executes inside :meth:`_stage`'s write, no job of its own."""
+        self._maybe_compact()
+        return frontier_ops.select_candidates(self._pending(r), self.hosts)
+
+    def _stage(self, r: int, selected: DataFrame) -> tuple[str, dict]:
+        """Phase 2: ONE pass over the fetch UDF, its output landing
+        directly in a disposition-partitioned staging parquet dir.
+        Returns (staging dir, round counters).
+
+        Everything downstream reads staged columns (spans pruned away
+        unless needed), and the ok-partition is adopted zero-copy as
+        the documents append — no memory-cache serialization of fat
+        span rows, no second spans write. Round counters ride the same
+        write as an Observation (CollectMetrics) — no second agg job.
+        """
         # attempt cap applies to EVERY non-ok/non-404 disposition: an
         # unknown status (e.g. 204 from a real fetcher) must exhaust
         # too, never retry unboundedly
@@ -391,12 +382,8 @@ class CrawlEngine:
             .when(is_dead, "dead")
             .otherwise("retry")
         )
-        import uuid as _uuid
-
-        from pyspark.sql import Observation
-
         staging = os.path.join(self.documents.data_dir,
-                               f"staging-{r:08d}-{_uuid.uuid4().hex[:8]}")
+                               f"staging-{r:08d}-{uuid.uuid4().hex[:8]}")
         obs = Observation()
         # the staging files carry `round` and `disposition` as REGULAR
         # columns and partition on a COPY (`dispo`): the disposition
@@ -405,7 +392,7 @@ class CrawlEngine:
         # driver-side manifest publish) — the former re-read + rewrite
         # of all scheduled rows into a second resolved data file was a
         # full extra Spark job per round
-        (fetched
+        (fetch_round(selected, self.fetcher)
          .withColumn("doc_id", F.col("url"))
          .withColumn("disposition", disposition)
          .withColumn("round", F.lit(r))
@@ -421,31 +408,23 @@ class CrawlEngine:
              ).alias("ok_xor"),
          )
          .write.partitionBy("dispo").parquet(staging))
-        agg = obs.get
-        scheduled, n_ok = agg["n"], agg["n_ok"]
-        t["fetch_stage_write"] = round(time.perf_counter() - t1, 3)
+        return staging, obs.get
 
+    def _publish(self, r: int, staging: str,
+                 scheduled: int) -> tuple[int, list | None]:
+        """Phase 3: the round's state appends, all read from the
+        immutable staging dir. Returns (new frontier URLs, this round's
+        bloom delta-shard blobs or None)."""
         if scheduled == 0:
             # zero-work round (frontier exhausted / all hosts gated /
-            # backoff gap): nothing staged, nothing to append — still a
-            # legal round; lineage marks it so resume stays monotone
-            import shutil as _shutil
-
-            _shutil.rmtree(staging, ignore_errors=True)
-            self._commit_lineage(r, 0, 0, 0, 0, self._state_digest())
-            self.next_round = r + 1
-            self.last_timings = t
-            return {"round": r, "scheduled": 0, "ok": 0, "errors": 0, "new_urls": 0}
+            # backoff gap): nothing staged, nothing to append
+            shutil.rmtree(staging, ignore_errors=True)
+            return 0, None
 
         # explicit schema: never infer from staged files (a partition
         # dir may be absent — e.g. no retries this round)
         staged = (self.spark.read.schema(schemas.STAGED)
                   .option("basePath", staging).parquet(staging))
-
-        self._seen_xor ^= int(agg["ok_xor"])
-        self._seen_n += n_ok
-        self._resolved_n += scheduled
-        n_err = scheduled - n_ok
 
         # first-wins (D2): candidates never re-enter the frontier —
         # every previously discovered URL already has a frontier row.
@@ -455,18 +434,10 @@ class CrawlEngine:
         # every link is already known, so this skips hashing millions
         # of candidate strings per round (enrich_candidates contract).
         ok_rows = staged.filter(F.col("disposition") == "ok")
-        candidates = (
-            enrich_candidates(
-                extract_links(ok_rows)
-                .join(self.frontier.read().select("url"), "url", "left_anti"))
-            .select(
-                "url", "url_hash", "url_sha", "host", "path",
-                url_priority_col(self.seed).alias("priority"),
-                F.lit(r).alias("discovered_round"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).alias("not_before"),
-            )
-        )
+        candidates = _discovered(
+            extract_links(ok_rows)
+            .join(self.frontier.read().select("url"), "url", "left_anti"),
+            url_priority_col(self.seed), r)
         retry_rows = staged.filter(F.col("disposition") == "retry").select(
             "url", "url_hash", "url_sha", "host", "path", "priority",
             "discovered_round",
@@ -474,19 +445,14 @@ class CrawlEngine:
             (F.lit(r) + self._retry_gap_col()).cast("int").alias("not_before"),
         )
 
-        # appends are independent (each atomic; the lineage row below is
-        # the round's commit marker) → overlap the frontier write and
-        # the bloom delta-shard build (both read the immutable staging
-        # dir). The documents AND resolved appends both adopt staged
-        # partitions zero-copy (the files carry round/disposition as
-        # regular columns; reads project each table's schema) — the
-        # resolved table's former 1-job re-read + rewrite per round is
-        # now a driver-side manifest publish. New-URL count rides the
-        # frontier append as an Observation — no separate
-        # snapshot-delta count job.
-        t1 = time.perf_counter()
-        from concurrent.futures import ThreadPoolExecutor
-
+        # appends are independent (each atomic; the lineage row is the
+        # round's commit marker) → overlap the frontier write and the
+        # bloom delta-shard build. The documents AND resolved appends
+        # both adopt staged partitions zero-copy (the files carry
+        # round/disposition as regular columns; reads project each
+        # table's schema) — a driver-side manifest publish each. The
+        # new-URL count rides the frontier append as an Observation —
+        # no separate snapshot-delta count job.
         obs_frontier = Observation()
         # REBALANCE (AQE advisory-size repartition) before the write:
         # in the mid-crawl steady state nearly every candidate is
@@ -505,10 +471,8 @@ class CrawlEngine:
                      F.count(F.when(F.col("attempt") == 0, 1)).alias("n_new"))
         )
         ok_dir = os.path.join(staging, "dispo=ok")
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(self.frontier.append, frontier_append),
-            ]
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            frontier_fut = pool.submit(self.frontier.append, frontier_append)
             blob_fut = (
                 pool.submit(build_shard_blobs,
                             staged.select("url_hash", "attempt"),
@@ -520,33 +484,39 @@ class CrawlEngine:
             self.resolved.append_dir(
                 [p for d in ("ok", "dead", "retry")
                  if os.path.isdir(p := os.path.join(staging, f"dispo={d}"))])
-            for f in futs:
-                f.result()
+            frontier_fut.result()
             blobs = blob_fut.result() if blob_fut is not None else None
-        t["state_appends"] = round(time.perf_counter() - t1, 3)
 
         if self.archive_dir is not None and os.path.isdir(ok_dir):
-            t1 = time.perf_counter()
-            self._archive_round(r, staged.filter(F.col("disposition") == "ok"))
-            t["archive"] = round(time.perf_counter() - t1, 3)
+            self._archive_round(r, ok_rows)
+        return int(obs_frontier.get["n_new"]), blobs
 
-        t1 = time.perf_counter()
+    def _commit(self, r: int, counts: dict, n_new: int,
+                blobs: list | None) -> dict:
+        """Phase 4: fold the round into the live bloom and the exact
+        counters, then append the lineage row — the round's commit
+        marker. Returns the round's stats."""
         if blobs is not None:
             # absorb after the resolved append: a regrow rebuild reads
             # the resolved table, which must already include this round
-            self._bloom_absorb_blobs(blobs)
-        n_new = int(obs_frontier.get["n_new"])
+            self.bloom.absorb_blobs(blobs)
+            if self.bloom.needs_regrow():
+                self._rebuild_bloom(capacity=self.bloom.capacity * 4)
+            else:
+                self._broadcast_bloom()
+        scheduled, n_ok = counts["n"], counts["n_ok"]
+        n_err = scheduled - n_ok
+        self._seen_xor ^= int(counts["ok_xor"])
+        self._seen_n += n_ok
+        self._resolved_n += scheduled
         # compaction bookkeeping: each scheduled fetch resolves exactly
         # one frontier (url_sha, attempt) slot; the frontier gained the
         # new candidates plus one bumped-attempt row per retry
-        n_retry = scheduled - n_ok - int(agg["n_dead"])
+        n_retry = n_err - int(counts["n_dead"])
         self._resolved_in_frontier += scheduled
         self._frontier_rows += n_new + n_retry
-        self._commit_lineage(r, scheduled, n_ok, n_err, n_new,
-                             self._state_digest())
-        t["lineage"] = round(time.perf_counter() - t1, 3)
+        self._commit_lineage(r, scheduled, n_ok, n_err, n_new)
         self.next_round = r + 1
-        self.last_timings = t
         return {"round": r, "scheduled": scheduled, "ok": n_ok,
                 "errors": n_err, "new_urls": n_new}
 
@@ -573,13 +543,9 @@ class CrawlEngine:
         ever being scheduled (verified in tests); it is swept by the
         next compaction.
         """
-        from pyspark.sql import Observation
-
         obs = Observation()
         pend = (
-            self.frontier.read()
-            .join(self.resolved.read().select("url_sha", "attempt"),
-                  ["url_sha", "attempt"], "left_anti")
+            frontier_ops.unresolved(self.frontier.read(), self.resolved.read())
             .observe(obs, F.count(F.lit(1)).alias("n"))
         )
         self.frontier.overwrite(pend)
@@ -590,7 +556,7 @@ class CrawlEngine:
         return n
 
     def _maybe_compact(self) -> None:
-        """Ratio-triggered compaction (run_round entry hook). The
+        """Ratio-triggered compaction (:meth:`_select` entry hook). The
         counters are exact deltas maintained per round (no extra jobs):
         rediscovered-resolved rows re-entering post-compaction are the
         only drift — counted pending though unschedulable — which only

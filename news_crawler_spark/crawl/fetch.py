@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from news_crawler_spark import schemas
+from news_crawler_spark.crawl.frontier import N_SALTS
 from news_crawler_spark.fixtures.sitegen import EXCLUDED_HOST, SiteConfig, synth_page
 
 
@@ -47,10 +48,8 @@ class SyntheticFetcher:
     per-page CPU cost, which is what the throughput bench measures.
     """
 
-    def __init__(self, cfg: SiteConfig, simulate_latency: bool = False,
-                 parse_html: bool = False):
+    def __init__(self, cfg: SiteConfig, parse_html: bool = False):
         self.cfg = cfg
-        self.simulate_latency = simulate_latency
         self.parse_html = parse_html
 
     def fetch(self, url: str) -> dict:
@@ -61,11 +60,8 @@ class SyntheticFetcher:
             page, html = synth_html(self.cfg, url)
             if page["status"] == 200:
                 page = {**page, "spans": html_to_spans(html)}
-        else:
-            page = synth_page(self.cfg, url)
-        if self.simulate_latency:
-            time.sleep(page["fetch_ms"] / 1000.0)
-        return page
+            return page
+        return synth_page(self.cfg, url)
 
 
 class HttpFetcher:
@@ -103,7 +99,7 @@ class HttpFetcher:
                     "published": None, "spans": None}
 
 
-def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
+def fetch_round(selected: DataFrame, fetcher: Fetcher,
                 respect_delay: bool = False) -> DataFrame:
     """Fetch+parse the selected candidates; returns schemas.FETCHED.
 
@@ -124,7 +120,7 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
     # low-core rounds ~10%).
     n_parts = 4 * selected.sparkSession.sparkContext.defaultParallelism
     inp = (
-        selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(n_salts)))
+        selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(N_SALTS)))
         .repartition(n_parts, F.col("host"), F.col("salt"))
         .select(*passthrough, "crawl_delay")
     )
@@ -136,7 +132,7 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
             for row in pdf.itertuples(index=False):
                 page = fetcher.fetch(row.url)
                 if respect_delay and row.crawl_delay:  # pragma: no cover - timing
-                    time.sleep(row.crawl_delay * n_salts)
+                    time.sleep(row.crawl_delay * N_SALTS)
                 out["url"].append(row.url)
                 out["url_hash"].append(row.url_hash)
                 out["url_sha"].append(row.url_sha)
@@ -196,11 +192,12 @@ def extract_links(fetched: DataFrame) -> DataFrame:
 
 
 def enrich_candidates(cands: DataFrame) -> DataFrame:
-    """Derive url_hash/url_sha/host/path for candidate URLs — applied
-    AFTER the first-wins anti-join so only genuinely new URLs pay the
-    sha256/regex cost (extract_links contract above)."""
+    """Add url_hash/url_sha/host/path to rows keyed by ``url``. The
+    crawl applies it AFTER the first-wins anti-join so only genuinely
+    new URLs pay the sha256/regex cost (extract_links contract above);
+    seed install and the trap report derive the same columns here."""
     return cands.select(
-        "url",
+        "*",
         F.xxhash64("url").alias("url_hash"),
         F.sha2(F.col("url"), 256).alias("url_sha"),
         F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),

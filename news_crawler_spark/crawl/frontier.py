@@ -3,10 +3,9 @@
 All native DataFrame ops — zero Python on this path. Implements, per
 SURVEY.md §2:
 
-* latest-attempt resolution over the append-only frontier (retry rows
-  T4 supersede their predecessors),
-* the scale-critical anti-join against ``url_seen``/``dead``
-  (D2/J1, reference ``scheduler.py:59-75``),
+* the scale-critical scheduling-slot anti-join against ``resolved``
+  (:func:`unresolved`; a retry row T4 opens its URL's next slot —
+  D2/J1, reference ``scheduler.py:59-75``),
 * robots + politeness-budget gating at *selection* time — never by
   sleeping in UDFs (T3, reference ``news.py:134-135``; north_rule),
 * priority top-k per host with a **two-phase, salt-local pre-prune**
@@ -14,13 +13,12 @@ SURVEY.md §2:
   (L4, reference ``news.py:151-163``; SURVEY.md §4 skew row).
 
 Scale notes (10^10 frontier): the frontier is append-only and
-bucket-partitioned by ``url_hash``; the latest-attempt window and the
-seen anti-join both shuffle on ``url_sha``/``url_hash``, so bucketing
-the three state tables identically makes these joins co-partitioned
-(no shuffle of the big sides on a real cluster). The per-host top-k
-never sees the full frontier: the salt-local phase-1 prune cuts each
-host to ``budget`` rows per salt bucket before the global per-host
-window. The bloom pre-filter (crawl.bloom) drops >99% of seen
+bucket-partitioned by ``url_hash``; the slot anti-join shuffles on
+``url_sha``/``url_hash``, so bucketing the three state tables
+identically makes it co-partitioned (no shuffle of the big sides on a
+real cluster). The per-host top-k never sees the full frontier: the
+salt-local phase-1 prune cuts each host to ``budget`` rows per salt
+bucket before the global per-host window. The bloom pre-filter (crawl.bloom) drops >99% of seen
 candidates before the exact anti-join.
 """
 
@@ -29,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# salt fan-out for the hot-host pre-prune; at cluster scale set to
-# ~(executors * cores) / n_active_hosts, floor 8
+# salt fan-out for the hot-host pre-prune and the fetch repartition;
+# at cluster scale set to ~(executors * cores) / n_active_hosts, floor 8
 N_SALTS = 8
 
 
@@ -51,8 +49,8 @@ def freshness_score(priority_col, lastmod_col, ref_date: str,
     return F.round(p * F.pow(F.lit(2.0), -age / F.lit(half_life_days)), 6)
 
 
-def pending(frontier: DataFrame, resolved: DataFrame, round_no: int) -> DataFrame:
-    """Frontier rows eligible this round.
+def unresolved(rows: DataFrame, resolved: DataFrame) -> DataFrame:
+    """``rows`` whose scheduling slot has no ``resolved`` row.
 
     ``(url_sha, attempt)`` is a *scheduling slot*: discovery dedup
     guarantees one frontier row per slot, and every scheduled slot
@@ -61,18 +59,17 @@ def pending(frontier: DataFrame, resolved: DataFrame, round_no: int) -> DataFram
     on the slot key — no window, no full-frontier sort. At 10^10 both
     tables are bucket-partitioned by ``url_hash``, making this the
     co-partitioned join the bloom shards pre-filter (SURVEY.md §7.2 M4).
+    This is the one definition of the slot join: selection (exact and
+    bloom-positive paths), resume's counters and compaction all use it.
     """
-    return (
-        frontier
-        .filter(F.col("not_before") <= F.lit(round_no))
-        .join(resolved.select("url_sha", "attempt"),
-              ["url_sha", "attempt"], "left_anti")
-    )
+    slot = ["url_sha", "attempt"]
+    return rows.join(resolved.select(*slot), slot, "left_anti")
 
 
 def select_candidates(cand: DataFrame, hosts: DataFrame) -> DataFrame:
     """The round's fetch set with per-host sequence numbers, from a
-    prebuilt pending set (see :func:`pending` / engine bloom path).
+    prebuilt pending set (see :func:`unresolved` and the engine's
+    bloom path).
 
     Returns pending columns + ``seq`` (1-based per-host fetch order:
     priority desc, url asc — the oracle's total order) + host columns.

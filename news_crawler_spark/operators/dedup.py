@@ -50,22 +50,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def _token_shingles(text_col: str, n: int) -> F.Column:
-    """Distinct n-gram shingles over whitespace tokens as one array
-    expression. NOTE: inside a HOF lambda the token split re-evaluates
-    per element — prefer :func:`_shingle_rows` on hot paths."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n_sh = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    shingles = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    # a doc shorter than n tokens contributes its whole text as one shingle
-    return F.array_distinct(
-        F.when(n_sh > 0, shingles).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int,
                   distinct: bool = True) -> DataFrame:
     """(id, shingle) rows — zero shuffles before the caller's own

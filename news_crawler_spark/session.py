@@ -14,7 +14,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# defaults fit the host: every CPU this process may run on, and half
+# of physical memory for the driver heap
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory (MemTotal), as a JVM size in MiB."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{total // 2 >> 20}m"
 
 
 def get_spark(
@@ -48,7 +57,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # shuffle/spill on tmpfs when available: the sandbox's block

@@ -43,10 +43,6 @@ def read_documents_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(DOCUMENTS_FLAT_SCHEMA).json(path)
 
 
-def read_documents_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(DOCUMENTS_FLAT_SCHEMA).parquet(path)
-
-
 def read_documents_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC with the same declared schema (columnar alternative for
     warehouses standardized on ORC; identical Catalyst pushdown path)."""

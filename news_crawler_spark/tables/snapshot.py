@@ -17,10 +17,9 @@ from Iceberg:
   after a kill re-pins each state table to the snapshot ids recorded
   in the last complete lineage row (SURVEY.md §7.2 M5).
 
-On a real cluster this module is swapped for Iceberg catalog tables
-(``try_iceberg()`` below probes for the runtime jar); the engine code
-only uses the four methods of :class:`SnapshotTable`, so the swap is
-mechanical.
+On a real cluster this module is swapped for Iceberg catalog tables;
+the engine code only uses the four methods of :class:`SnapshotTable`,
+so the swap is mechanical.
 
 Layout::
 
@@ -37,15 +36,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def try_iceberg(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is usable in this session."""
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 class SnapshotTable:

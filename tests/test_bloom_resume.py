@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from news_crawler_spark.crawl import CrawlEngine, SyntheticFetcher
 from news_crawler_spark.crawl.bloom import BloomShards, probe_negative_mask
@@ -86,6 +87,20 @@ def test_resume_validates_bloom_digest(spark, tmp_path):
     eng2 = _mk_engine(spark, state)
     eng2.resume()
     assert eng2.bloom.digest() == committed
+
+    # a newer lineage row whose seen half or bloom half disagrees with
+    # the state rebuilt from the resolved table must stop resume
+    last = eng.lineage.read().orderBy(F.col("round").desc()).first().asDict()
+    seen, bloom = last["bloom_digest"].split(":")
+    good = eng.lineage.current_snapshot()
+    for tampered, which in ((f"{'0' * 16}:{bloom}", "URL-seen"),
+                            (f"{seen}:{'0' * 16}", "bloom shard")):
+        eng.lineage.rollback(good)
+        eng.lineage.append_rows([tuple({
+            **last, "round": last["round"] + 1,
+            "bloom_digest": tampered}.values())])
+        with pytest.raises(RuntimeError, match=f"{which} digest mismatch"):
+            _mk_engine(spark, state).resume()
 
 
 def test_compaction_mid_crawl_preserves_semantics(spark, tmp_path):

@@ -10,6 +10,9 @@ synthetic site graph:
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from news_crawler_spark.crawl import CrawlEngine, SyntheticFetcher
@@ -120,12 +123,21 @@ def test_zero_work_round_is_legal(spark, tmp_path):
     eng.init(spark.createDataFrame(
         [{"url": cfg.page_url(0, 999), "priority": 1.0}],
         "url string, priority double"))
+
+    def staging_dirs():
+        return sorted(glob.glob(
+            os.path.join(eng.documents.data_dir, "staging-*")))
+
     s0 = eng.run_round()
     assert s0["scheduled"] == 1 and s0["ok"] == 0
+    adopted = staging_dirs()  # round 0's staging dir is resolved's data
+    assert len(adopted) == 1
     s1 = eng.run_round()  # frontier now empty — must not raise
     assert s1 == {"round": 1, "scheduled": 0, "ok": 0, "errors": 0,
                   "new_urls": 0}
     assert eng.run_round()["scheduled"] == 0  # and stays legal
+    # a zero-work round leaves no staging dir behind
+    assert staging_dirs() == adopted
     assert eng.resume() == 3  # zero rounds commit lineage too
 
 

@@ -46,26 +46,31 @@ def test_global_topk_is_take_ordered(spark):
 
 
 def test_selection_plan_has_no_full_frontier_window(spark, tmp_path):
-    """Round selection: the (url_sha, attempt) slot anti-join replaced
-    the latest-attempt window — no Window over the raw frontier before
-    the per-host budget rank (windows appear only after gating)."""
-    from news_crawler_spark.crawl import frontier as fops
-    from news_crawler_spark.fixtures import SiteConfig, host_rows
-    from news_crawler_spark.schemas import FRONTIER, HOSTS, RESOLVED
+    """Round selection: the pending set the engine builds is one
+    (url_sha, attempt) slot anti-join — on the exact branch and on the
+    bloom branch, where only the probe's positives reach it — with no
+    Window over the raw frontier (windows appear only after gating, in
+    the per-host budget rank)."""
+    from news_crawler_spark.crawl import CrawlEngine, SyntheticFetcher
+    from news_crawler_spark.fixtures import SiteConfig, host_rows, seed_rows
+    from news_crawler_spark.schemas import HOSTS
 
     cfg = SiteConfig()
-    frontier = spark.createDataFrame([], FRONTIER)
-    resolved = spark.createDataFrame([], RESOLVED)
     hosts = spark.createDataFrame(host_rows(cfg), HOSTS)
-    pend = fops.pending(frontier, resolved, 0)
-    pend_plan = plan_of(pend, "simple")
-    assert "Window" not in pend_plan
-    assert "LeftAnti" in pend_plan
+    seeds = spark.createDataFrame(seed_rows(cfg), "url string, priority double")
+    for branch, min_resolved in (("exact", 2_000_000), ("bloom", 0)):
+        eng = CrawlEngine(spark, str(tmp_path / branch), hosts,
+                          SyntheticFetcher(cfg), seed=cfg.seed,
+                          bloom_min_resolved=min_resolved)
+        eng.init(seeds)
+        pend_plan = plan_of(eng._pending(0), "simple")
+        assert "Window" not in pend_plan, branch
+        assert pend_plan.count("LeftAnti") == 1, branch
+        # the bloom probe (a pandas UDF) runs on the bloom branch only
+        assert ("ArrowEvalPython" in pend_plan) == (branch == "bloom")
 
-    sel = fops.select_candidates(pend, hosts)
-    sel_plan = plan_of(sel, "simple")
-    # the politeness gate join is broadcast (hosts is tiny)
-    assert "Broadcast" in sel_plan
+        # the politeness gate join is broadcast (hosts is tiny)
+        assert "Broadcast" in plan_of(eng._select(0), "simple"), branch
 
 
 def test_fetch_stage_keeps_explicit_partitioning(spark):
