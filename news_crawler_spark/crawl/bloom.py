@@ -31,7 +31,6 @@ trade ever flips.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -57,6 +56,14 @@ def _positions(keys: np.ndarray, m_bits: int) -> np.ndarray:
     return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
 
 
+def _scatter(bits: np.ndarray, keys: np.ndarray, m_bits: int) -> np.uint64:
+    """Set ``keys``' bits in one shard's bit array; returns the keys'
+    xor (their share of the order-insensitive key-set digest)."""
+    pos = _positions(keys, m_bits).ravel()
+    np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
+    return np.bitwise_xor.reduce(keys.astype(np.uint64))
+
+
 class BloomShards:
     """Driver-held shard set with vectorized add/probe and auto-regrow."""
 
@@ -74,16 +81,13 @@ class BloomShards:
         if len(keys) == 0:
             return
         keys = keys.astype(np.int64)
-        self._key_xor ^= int(np.bitwise_xor.reduce(keys.astype(np.uint64)))
         self._key_n += len(keys)
         shard_of = (keys % self.n_shards + self.n_shards) % self.n_shards
         for s in range(self.n_shards):
             ks = keys[shard_of == s]
             if len(ks) == 0:
                 continue
-            pos = _positions(ks, self.m_bits).ravel()
-            np.bitwise_or.at(self.bits[s], pos >> 3,
-                             np.uint8(1) << (pos & 7).astype(np.uint8))
+            self._key_xor ^= int(_scatter(self.bits[s], ks, self.m_bits))
             self.counts[s] += len(ks)
 
     def needs_regrow(self) -> bool:
@@ -141,9 +145,7 @@ def build_shard_blobs(df: DataFrame, n_shards: int, m_bits: int) -> list:
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = pdf["h"].to_numpy().astype(np.int64)
         bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        pos = _positions(keys, m_bits).ravel()
-        np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-        xor = np.int64(np.bitwise_xor.reduce(keys.astype(np.uint64)))
+        xor = np.int64(_scatter(bits, keys, m_bits))
         return pd.DataFrame({
             "shard_id": [int(pdf["shard_id"].iloc[0])],
             "bits": [bits.tobytes()],

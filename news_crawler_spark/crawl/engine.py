@@ -16,8 +16,8 @@ A round (:meth:`CrawlEngine.run_round`) is four phases::
               anti-join vs frontier) + retry rows append to the
               frontier while the bloom delta shards build.
     _commit   bloom absorb, exact counter deltas, then the lineage row
-              (the commit marker). A zero-work round publishes nothing
-              and commits the same way.
+              (the commit marker, tables/snapshot.commit_lineage). A
+              zero-work round publishes nothing and commits the same way.
 
 State tables (all append-only snapshot tables):
 
@@ -31,8 +31,9 @@ State tables (all append-only snapshot tables):
 
 Exactly-once per URL: the lineage row for round r is appended *after*
 every state append; resume pins each table to the snapshot ids of the
-last complete lineage row, so a job killed mid-round replays only the
-unfinished round and no URL twice (SURVEY.md §7.4 — a deliberate
+last complete lineage row (tables/snapshot.resume_lineage), so a job
+killed mid-round replays only the unfinished round and no URL twice
+(SURVEY.md §7.4 — a deliberate
 upgrade over the reference's mark-before-send at-most-once,
 ``scheduler.py:60-89``).
 
@@ -67,7 +68,14 @@ from news_crawler_spark.crawl.fetch import (
     extract_links,
     fetch_round,
 )
-from news_crawler_spark.tables import SnapshotTable
+from news_crawler_spark.tables.snapshot import (
+    SnapshotTable,
+    commit_lineage,
+    resume_lineage,
+)
+
+# the counters of a round that scheduled nothing (init commits as one)
+_NO_WORK = {"n": 0, "n_ok": 0, "n_dead": 0, "ok_xor": 0}
 
 
 def url_priority_col(seed: int, url_col: str = "url") -> F.Column:
@@ -92,7 +100,7 @@ def _discovered(urls: DataFrame, priority: F.Column, round_no: int) -> DataFrame
 class CrawlEngine:
     def __init__(self, spark: SparkSession, state_dir: str, hosts: DataFrame,
                  fetcher: Fetcher, seed: int = 42, max_attempts: int = 3,
-                 use_bloom: bool = True, bloom_min_resolved: int = 2_000_000,
+                 bloom_min_resolved: int = 2_000_000,
                  retry_jitter_span: int = 0, compact_ratio: float = 4.0,
                  compact_min_resolved: int = 100_000,
                  archive_dir: str | None = None,
@@ -103,7 +111,7 @@ class CrawlEngine:
         self.seed = seed
         self.max_attempts = max_attempts
         self.retry_jitter_span = retry_jitter_span
-        self.bloom = BloomShards() if use_bloom else None
+        self.bloom = BloomShards()
         self._bloom_bc = None
         # below this resolved-set size the exact anti-join beats the
         # probe's Arrow round trip (measured in-sandbox); the shards are
@@ -135,6 +143,10 @@ class CrawlEngine:
         self.resolved = st("resolved", schemas.RESOLVED)
         self.documents = st("documents", schemas.DOCUMENTS)
         self.lineage = st("lineage", schemas.LINEAGE)
+        # lineage column -> the state table whose snapshot it pins
+        self._pins = {"frontier_snapshot": self.frontier,
+                      "resolved_snapshot": self.resolved,
+                      "documents_snapshot": self.documents}
         self.next_round = 0
         self._seen_xor = 0
         self._seen_n = 0
@@ -230,22 +242,7 @@ class CrawlEngine:
         self.frontier.append(
             _discovered(seeds, F.col("priority").cast("double"), 0))
         self._frontier_rows = self.frontier.read().count()
-        self._commit_lineage(-1, 0, 0, 0, 0)
-        self.next_round = 0
-
-    def _commit_lineage(self, round_no: int, scheduled: int, ok: int,
-                        errors: int, new_urls: int) -> None:
-        # driver-side write (SnapshotTable.append_rows): one record per
-        # round does not justify scheduling a Spark job — the job/task
-        # round trip was a measurable per-round fixed cost that the
-        # low-core bench level cannot amortize
-        self.lineage.append_rows(
-            [(round_no, scheduled, ok, errors, new_urls,
-              self.frontier.current_snapshot(),
-              self.resolved.current_snapshot(),
-              self.documents.current_snapshot(),
-              self._state_digest(),
-              _dt.datetime.now(_dt.timezone.utc).isoformat())])
+        self._commit(-1, _NO_WORK, 0, None)
 
     def resume(self) -> int:
         """Pin all state tables to the last complete lineage row.
@@ -256,13 +253,9 @@ class CrawlEngine:
         Raises if the rebuilt URL-seen set or bloom shards disagree
         with the lineage row's digest.
         """
-        rows = self.lineage.read().orderBy(F.col("round").desc()).limit(1).collect()
-        if not rows:
+        last = resume_lineage(self.lineage, self._pins, "round")
+        if last is None:
             raise RuntimeError("resume() before init(): no lineage rows")
-        last = rows[0]
-        self.frontier.rollback(last.frontier_snapshot)
-        self.resolved.rollback(last.resolved_snapshot)
-        self.documents.rollback(last.documents_snapshot)
         self._rebuild_seen_digest()
         # exact compaction counters (two count jobs, resume-only —
         # never per-round): every frontier row's slot is either
@@ -271,10 +264,10 @@ class CrawlEngine:
         self._resolved_in_frontier = self._frontier_rows - (
             frontier_ops.unresolved(self.frontier.read(), self.resolved.read())
             .count())
-        if self.bloom is not None:
-            self._rebuild_bloom()
+        self._rebuild_bloom()
         # "seen:bloom" halves; an empty half (state written before the
-        # digest existed, or with the bloom off) is not checked
+        # digest existed, or by an engine without the bloom) is not
+        # checked
         committed = last.bloom_digest.partition(":")[::2]
         rebuilt = self._state_digest().partition(":")[::2]
         for name, c, b in zip(("URL-seen", "bloom shard"), committed, rebuilt):
@@ -299,8 +292,7 @@ class CrawlEngine:
         # it and anti-join directly. Counters are exact per-round
         # deltas; no extra jobs.
         frac_resolved = self._resolved_in_frontier / max(1, self._frontier_rows)
-        if (self.bloom is None or self._resolved_n < self.bloom_min_resolved
-                or frac_resolved > 0.7):
+        if self._resolved_n < self.bloom_min_resolved or frac_resolved > 0.7:
             return frontier_ops.unresolved(due, resolved)
         if self._bloom_bc is None:
             self._broadcast_bloom()
@@ -473,19 +465,16 @@ class CrawlEngine:
         ok_dir = os.path.join(staging, "dispo=ok")
         with ThreadPoolExecutor(max_workers=2) as pool:
             frontier_fut = pool.submit(self.frontier.append, frontier_append)
-            blob_fut = (
-                pool.submit(build_shard_blobs,
-                            staged.select("url_hash", "attempt"),
-                            self.bloom.n_shards, self.bloom.m_bits)
-                if self.bloom is not None else None
-            )
+            blob_fut = pool.submit(build_shard_blobs,
+                                   staged.select("url_hash", "attempt"),
+                                   self.bloom.n_shards, self.bloom.m_bits)
             if os.path.isdir(ok_dir):
                 self.documents.append_dir(ok_dir)
             self.resolved.append_dir(
                 [p for d in ("ok", "dead", "retry")
                  if os.path.isdir(p := os.path.join(staging, f"dispo={d}"))])
             frontier_fut.result()
-            blobs = blob_fut.result() if blob_fut is not None else None
+            blobs = blob_fut.result()
 
         if self.archive_dir is not None and os.path.isdir(ok_dir):
             self._archive_round(r, ok_rows)
@@ -495,7 +484,8 @@ class CrawlEngine:
                 blobs: list | None) -> dict:
         """Phase 4: fold the round into the live bloom and the exact
         counters, then append the lineage row — the round's commit
-        marker. Returns the round's stats."""
+        marker. ``init`` commits round -1 through it with no work.
+        Returns the round's stats."""
         if blobs is not None:
             # absorb after the resolved append: a regrow rebuild reads
             # the resolved table, which must already include this round
@@ -515,7 +505,12 @@ class CrawlEngine:
         n_retry = n_err - int(counts["n_dead"])
         self._resolved_in_frontier += scheduled
         self._frontier_rows += n_new + n_retry
-        self._commit_lineage(r, scheduled, n_ok, n_err, n_new)
+        # the lineage row: the round's commit marker (driver-side, no job)
+        commit_lineage(
+            self.lineage, self._pins, round=r, scheduled=scheduled,
+            fetched_ok=n_ok, errors=n_err, new_urls=n_new,
+            bloom_digest=self._state_digest(),
+            committed_at=_dt.datetime.now(_dt.timezone.utc).isoformat())
         self.next_round = r + 1
         return {"round": r, "scheduled": scheduled, "ok": n_ok,
                 "errors": n_err, "new_urls": n_new}
@@ -577,8 +572,6 @@ class CrawlEngine:
 
     def _state_digest(self) -> str:
         """Lineage audit digest: seen digest + bloom shard digest."""
-        if self.bloom is None:
-            return self._seen_digest()
         return f"{self._seen_digest()}:{self.bloom.digest()}"
 
     def _rebuild_seen_digest(self) -> None:

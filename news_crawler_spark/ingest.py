@@ -43,7 +43,11 @@ from news_crawler_spark.operators.dedup import (
     minhash_band_table,
     minhash_signatures,
 )
-from news_crawler_spark.tables.snapshot import SnapshotTable
+from news_crawler_spark.tables.snapshot import (
+    SnapshotTable,
+    commit_lineage,
+    resume_lineage,
+)
 
 FINGERPRINTS = T.StructType([
     T.StructField("fp", T.StringType()),
@@ -76,30 +80,27 @@ INGEST_LINEAGE = T.StructType([
 ])
 
 
-class DedupState:
-    """Persisted fingerprint + MinHash-band dedup state (see module
-    docstring). ``doc_id`` values must be globally unique across
-    batches (the ingest key); batch-internal duplicates get their
-    verdicts against PRIOR state only — deduping within one batch is
-    the stateless operators' job (``exact_dedup`` /
-    ``minhash_lsh_candidates``) and composes in front of this."""
+class _IngestState:
+    """The commit protocol both ingest states share: data tables first,
+    then one lineage row pinning each of them
+    (:func:`~news_crawler_spark.tables.snapshot.commit_lineage`, order
+    column ``seq``), :meth:`resume` re-pinning to the last such row,
+    and batch-id idempotence over the lineage. A subclass opens its
+    tables with :meth:`_table` and sets ``lineage``, ``verdicts``
+    (first column ``batch_id``) and ``_pins`` (lineage column → state
+    table); the rest is its schemas and its classification."""
+
+    _QUERY_PREFIX: str  # streaming query name: f"{prefix}_{batch_prefix}"
 
     def __init__(self, spark: SparkSession, state_dir: str,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 num_hashes: int = 32, bands: int = 8,
-                 shingle_n: int = 3, hash_fn: str = "sha2"):
+                 text_col: str, id_col: str):
         self.spark = spark
+        self.state_dir = state_dir
         self.text_col = text_col
         self.id_col = id_col
-        self.num_hashes = num_hashes
-        self.bands_n = bands
-        self.shingle_n = shingle_n
-        self.hash_fn = hash_fn
-        st = lambda name, schema: SnapshotTable(spark, state_dir, name, schema)  # noqa: E731
-        self.fingerprints = st("fingerprints", FINGERPRINTS)
-        self.bands = st("bands", BANDS)
-        self.verdicts = st("verdicts", VERDICTS)
-        self.lineage = st("ingest_lineage", INGEST_LINEAGE)
+
+    def _table(self, name: str, schema: T.StructType) -> SnapshotTable:
+        return SnapshotTable(self.spark, self.state_dir, name, schema)
 
     # -- recovery ---------------------------------------------------------
     def resume(self) -> int:
@@ -108,16 +109,7 @@ class DedupState:
         ingest whose lineage row never landed are rolled back — the
         kill/resume invariant: no batch is ever half-ingested.
         Returns the number of committed batches."""
-        rows = (self.lineage.read()
-                .orderBy(F.col("seq").desc()).limit(1).collect())
-        if not rows:
-            for t in (self.fingerprints, self.bands, self.verdicts):
-                t.rollback(-1)
-            return 0
-        last = rows[0]
-        self.fingerprints.rollback(last.fp_snapshot)
-        self.bands.rollback(last.band_snapshot)
-        self.verdicts.rollback(last.verdict_snapshot)
+        resume_lineage(self.lineage, self._pins, "seq")
         return len(self.committed_batches())
 
     def committed_batches(self) -> list[str]:
@@ -133,6 +125,97 @@ class DedupState:
         rows = (self.lineage.read()
                 .orderBy(F.col("seq").desc()).limit(1).collect())
         return int(rows[0].seq) + 1 if rows else 0
+
+    def _commit(self, batch_id: str | None = None, **counts: int) -> None:
+        """Append the lineage row pinning every state table: the commit
+        marker, after all data appends (driver-side, no Spark job).
+        Without ``batch_id`` it is a compaction marker ``compact-<seq>``
+        with zero counts (see DedupState.compact)."""
+        seq = self._next_seq()
+        if batch_id is None:
+            batch_id = f"compact-{seq}"
+            counts = {c: 0 for c in self.lineage.schema.fieldNames()
+                      if c.startswith("n_")}
+        commit_lineage(self.lineage, self._pins, seq=seq,
+                       batch_id=batch_id, **counts)
+
+    def _replayed(self, batch_id: str) -> DataFrame | None:
+        """The committed verdicts of an already-ingested ``batch_id``,
+        or None if it never committed. The ``compact-`` prefix is
+        reserved: a colliding id would hit this lookup and the batch
+        would be silently skipped."""
+        if batch_id.startswith("compact-"):
+            raise ValueError(
+                f"batch_id {batch_id!r} uses the reserved 'compact-' "
+                "marker namespace — it would collide with compaction "
+                "lineage rows and be silently skipped")
+        done = (self.lineage.read()
+                .filter(F.col("batch_id") == batch_id).limit(1).collect())
+        if not done:
+            return None
+        return (self.verdicts.read()
+                .filter(F.col("batch_id") == batch_id).drop("batch_id"))
+
+    # -- streaming --------------------------------------------------------
+    def ingest_stream(self, stream: DataFrame, checkpoint_dir: str,
+                      batch_prefix: str = "stream", *,
+                      available_now: bool = True):
+        """Run the same ingest as a Structured Streaming sink.
+
+        Each micro-batch is classified and committed through
+        ``ingest`` with ``batch_id = f"{batch_prefix}-{epoch}"``.
+        Exactly-once composes from the two halves: Spark's streaming
+        checkpoint (``checkpoint_dir``) guarantees an epoch is
+        *re-delivered* after a crash rather than lost, and ingest's
+        batch_id idempotence turns that redelivery into a no-op replay
+        of the committed verdicts — the standard
+        foreachBatch-plus-idempotent-sink contract, same as the crawl
+        engine's lineage-last commit (SURVEY.md §2.12 T6).
+
+        ``available_now=True`` drains what's currently readable and
+        stops (the batch-orchestrated mode a backfill uses); pass
+        False for a continuously running micro-batch query. Returns
+        the StreamingQuery handle — callers own awaitTermination.
+        """
+
+        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
+            self.ingest(batch_df, f"{batch_prefix}-{epoch_id}")
+
+        writer = (stream.writeStream
+                  .foreachBatch(_sink)
+                  .option("checkpointLocation", checkpoint_dir)
+                  .queryName(f"{self._QUERY_PREFIX}_{batch_prefix}"))
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+
+class DedupState(_IngestState):
+    """Persisted fingerprint + MinHash-band dedup state (see module
+    docstring). ``doc_id`` values must be globally unique across
+    batches (the ingest key); batch-internal duplicates get their
+    verdicts against PRIOR state only — deduping within one batch is
+    the stateless operators' job (``exact_dedup`` /
+    ``minhash_lsh_candidates``) and composes in front of this."""
+
+    _QUERY_PREFIX = "dedup_ingest"
+
+    def __init__(self, spark: SparkSession, state_dir: str,
+                 text_col: str = "text", id_col: str = "doc_id",
+                 num_hashes: int = 32, bands: int = 8,
+                 shingle_n: int = 3, hash_fn: str = "sha2"):
+        super().__init__(spark, state_dir, text_col, id_col)
+        self.num_hashes = num_hashes
+        self.bands_n = bands
+        self.shingle_n = shingle_n
+        self.hash_fn = hash_fn
+        self.fingerprints = self._table("fingerprints", FINGERPRINTS)
+        self.bands = self._table("bands", BANDS)
+        self.verdicts = self._table("verdicts", VERDICTS)
+        self.lineage = self._table("ingest_lineage", INGEST_LINEAGE)
+        self._pins = {"fp_snapshot": self.fingerprints,
+                      "band_snapshot": self.bands,
+                      "verdict_snapshot": self.verdicts}
 
     # -- maintenance ------------------------------------------------------
     def compact(self) -> dict:
@@ -170,47 +253,8 @@ class DedupState:
             .select("doc_id", "band_id", "band_hash"))
         self.fingerprints.overwrite(self.fingerprints.read())
         after = self.bands.read().count()
-        seq = self._next_seq()
-        self.lineage.append_rows(
-            [(seq, f"compact-{seq}",
-              self.fingerprints.current_snapshot(),
-              self.bands.current_snapshot(),
-              self.verdicts.current_snapshot(),
-              0, 0, 0, 0)])
+        self._commit()
         return {"bands_before": before, "bands_after": after}
-
-    # -- streaming --------------------------------------------------------
-    def ingest_stream(self, stream: DataFrame, checkpoint_dir: str,
-                      batch_prefix: str = "stream", *,
-                      available_now: bool = True):
-        """Run the same ingest as a Structured Streaming sink.
-
-        Each micro-batch is classified and committed through
-        :meth:`ingest` with ``batch_id = f"{batch_prefix}-{epoch}"``.
-        Exactly-once composes from the two halves: Spark's streaming
-        checkpoint (``checkpoint_dir``) guarantees an epoch is
-        *re-delivered* after a crash rather than lost, and ingest's
-        batch_id idempotence turns that redelivery into a no-op replay
-        of the committed verdicts — the standard
-        foreachBatch-plus-idempotent-sink contract, same as the crawl
-        engine's lineage-last commit (SURVEY.md §2.12 T6).
-
-        ``available_now=True`` drains what's currently readable and
-        stops (the batch-orchestrated mode a backfill uses); pass
-        False for a continuously running micro-batch query. Returns
-        the StreamingQuery handle — callers own awaitTermination.
-        """
-
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            self.ingest(batch_df, f"{batch_prefix}-{epoch_id}")
-
-        writer = (stream.writeStream
-                  .foreachBatch(_sink)
-                  .option("checkpointLocation", checkpoint_dir)
-                  .queryName(f"dedup_ingest_{batch_prefix}"))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     # -- ingest -----------------------------------------------------------
     def ingest(self, batch: DataFrame, batch_id: str) -> DataFrame:
@@ -226,17 +270,9 @@ class DedupState:
         row is NOT re-ingested — its committed verdicts are returned
         (the at-most-once contract a retrying orchestrator needs).
         """
-        if batch_id.startswith("compact-"):
-            raise ValueError(
-                f"batch_id {batch_id!r} uses the reserved 'compact-' "
-                "marker namespace — it would collide with compaction "
-                "lineage rows and be silently skipped")
-        done = (self.lineage.read()
-                .filter(F.col("batch_id") == batch_id).limit(1).collect())
-        if done:
-            return (self.verdicts.read()
-                    .filter(F.col("batch_id") == batch_id)
-                    .select("doc_id", "verdict", "matched_id"))
+        done = self._replayed(batch_id)
+        if done is not None:
+            return done
 
         id_c, txt = self.id_col, self.text_col
         # widen a narrow (small-file) batch scan once for the whole
@@ -345,19 +381,9 @@ class DedupState:
             ]
             for f in futs:
                 f.result()
-        seq = self._next_seq()
-        # driver-side 1-row commit marker — no Spark job (see
-        # SnapshotTable.append_rows)
-        self.lineage.append_rows(
-            [(seq, batch_id,
-              self.fingerprints.current_snapshot(),
-              self.bands.current_snapshot(),
-              self.verdicts.current_snapshot(),
-              n_docs,
-              counts.get("exact_dup", 0),
-              counts.get("near_dup", 0),
-              counts.get("new", 0))])
-        return verdict_rows.select("doc_id", "verdict", "matched_id")
+        self._commit(batch_id, n_docs=n_docs, n_exact=counts["exact_dup"],
+                     n_near=counts["near_dup"], n_new=counts["new"])
+        return verdict_rows.drop("batch_id")
 
 
 PARAGRAPHS = T.StructType([
@@ -385,7 +411,7 @@ PARA_LINEAGE = T.StructType([
 ])
 
 
-class ParagraphState:
+class ParagraphState(_IngestState):
     """Persisted PARAGRAPH-granularity dedup state across ingest
     batches: :class:`DedupState`'s cross-run content-seen invariant
     pushed below the document, the incremental twin of the batch
@@ -413,46 +439,18 @@ class ParagraphState:
     over the concatenation of every batch in ingest order.
     """
 
+    _QUERY_PREFIX = "para_ingest"
+
     def __init__(self, spark: SparkSession, state_dir: str,
                  text_col: str = "text", id_col: str = "doc_id",
                  sep: str = "\n\n"):
-        self.spark = spark
-        self.text_col = text_col
-        self.id_col = id_col
+        super().__init__(spark, state_dir, text_col, id_col)
         self.sep = sep
-        st = lambda name, schema: SnapshotTable(spark, state_dir, name, schema)  # noqa: E731
-        self.paragraphs = st("paragraphs", PARAGRAPHS)
-        self.verdicts = st("para_verdicts", PARA_VERDICTS)
-        self.lineage = st("para_lineage", PARA_LINEAGE)
-
-    # -- recovery ---------------------------------------------------------
-    def resume(self) -> int:
-        """Re-pin state to the last complete lineage row (kill/resume:
-        a torn ingest's appends roll back). Returns committed-batch
-        count."""
-        rows = (self.lineage.read()
-                .orderBy(F.col("seq").desc()).limit(1).collect())
-        if not rows:
-            for t in (self.paragraphs, self.verdicts):
-                t.rollback(-1)
-            return 0
-        last = rows[0]
-        self.paragraphs.rollback(last.para_snapshot)
-        self.verdicts.rollback(last.verdict_snapshot)
-        return len(self.committed_batches())
-
-    def committed_batches(self) -> list[str]:
-        """Ingest batch_ids in commit order (compaction markers,
-        batch_id ``compact-<seq>``, excluded — see DedupState)."""
-        return [r.batch_id for r in
-                self.lineage.read()
-                .filter(~F.col("batch_id").startswith("compact-"))
-                .orderBy("seq").collect()]
-
-    def _next_seq(self) -> int:
-        rows = (self.lineage.read()
-                .orderBy(F.col("seq").desc()).limit(1).collect())
-        return int(rows[0].seq) + 1 if rows else 0
+        self.paragraphs = self._table("paragraphs", PARAGRAPHS)
+        self.verdicts = self._table("para_verdicts", PARA_VERDICTS)
+        self.lineage = self._table("para_lineage", PARA_LINEAGE)
+        self._pins = {"para_snapshot": self.paragraphs,
+                      "verdict_snapshot": self.verdicts}
 
     # -- maintenance ------------------------------------------------------
     def compact(self) -> dict:
@@ -463,33 +461,8 @@ class ParagraphState:
         DedupState.compact). Atomic overwrite; always safe to re-run."""
         n = self.paragraphs.read().count()
         self.paragraphs.overwrite(self.paragraphs.read())
-        seq = self._next_seq()
-        self.lineage.append_rows(
-            [(seq, f"compact-{seq}",
-              self.paragraphs.current_snapshot(),
-              self.verdicts.current_snapshot(),
-              0, 0, 0)])
+        self._commit()
         return {"paragraph_rows": n}
-
-    # -- streaming --------------------------------------------------------
-    def ingest_stream(self, stream: DataFrame, checkpoint_dir: str,
-                      batch_prefix: str = "stream", *,
-                      available_now: bool = True):
-        """Paragraph-granularity ingest as a Structured Streaming sink
-        — the same foreachBatch + idempotent-batch-id exactly-once
-        contract as :meth:`DedupState.ingest_stream` (see there for
-        the redelivery/replay argument)."""
-
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            self.ingest(batch_df, f"{batch_prefix}-{epoch_id}")
-
-        writer = (stream.writeStream
-                  .foreachBatch(_sink)
-                  .option("checkpointLocation", checkpoint_dir)
-                  .queryName(f"para_ingest_{batch_prefix}"))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     # -- ingest -----------------------------------------------------------
     def ingest(self, batch: DataFrame, batch_id: str) -> DataFrame:
@@ -500,17 +473,9 @@ class ParagraphState:
         compaction markers (see DedupState.ingest)."""
         from news_crawler_spark.operators.paragraphs import paragraph_rows
 
-        if batch_id.startswith("compact-"):
-            raise ValueError(
-                f"batch_id {batch_id!r} uses the reserved 'compact-' "
-                "marker namespace — it would collide with compaction "
-                "lineage rows and be silently skipped")
-        done = (self.lineage.read()
-                .filter(F.col("batch_id") == batch_id).limit(1).collect())
-        if done:
-            return (self.verdicts.read()
-                    .filter(F.col("batch_id") == batch_id)
-                    .select("doc_id", "n_paras", "n_new", "new_frac"))
+        done = self._replayed(batch_id)
+        if done is not None:
+            return done
 
         # pin: rows feed the witness agg, the state join, AND the
         # state append — without the checkpoint each consumer re-runs
@@ -552,10 +517,6 @@ class ParagraphState:
             flagged.filter(F.col("is_new"))
             .select("fp", "doc_id", "pos"),
             "fp")
-        seq = self._next_seq()
-        self.lineage.append_rows(
-            [(seq, batch_id,
-              self.paragraphs.current_snapshot(),
-              self.verdicts.current_snapshot(),
-              int(totals.nd), int(totals.np), int(totals.nn))])
-        return verdict_rows.select("doc_id", "n_paras", "n_new", "new_frac")
+        self._commit(batch_id, n_docs=int(totals.nd), n_paras=int(totals.np),
+                     n_new=int(totals.nn))
+        return verdict_rows.drop("batch_id")

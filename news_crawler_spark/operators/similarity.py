@@ -13,8 +13,6 @@ with a k-means assignment — same join shape.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -104,23 +102,6 @@ def cosine_topk_bruteforce(queries: DataFrame, corpus: DataFrame, k: int,
     )
 
 
-def hyperplane_signature_udf(dim: int, n_planes: int, seed: int = 42):
-    """Arrow-batched signer: sign-bit bucket id from seeded random
-    hyperplanes. The planes matrix is generated inside the UDF from
-    the seed (cheap, avoids a broadcast pickle per task)."""
-
-    @F.pandas_udf("int")
-    def sign_bucket(vecs: pd.Series) -> pd.Series:
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((dim, n_planes))
-        m = np.vstack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series((bits @ weights).astype(np.int32))
-
-    return sign_bucket
-
-
 def lsh_ann_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  n_planes: int = 8, n_tables: int = 4,
@@ -130,10 +111,8 @@ def lsh_ann_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
     equi-join replaces the cross join.
 
     Buckets come from :func:`rademacher_bucket_col` (sha256-derived ±1
-    planes, per-table seeds) — fully native and codegen'd, same family
-    and identical banding statistics as the seeded-Gaussian
-    :func:`hyperplane_signature_udf` (kept as the Arrow-batched §2.13
-    UDF surface), but replayable by ANY engine: the DuckDB oracle
+    planes, per-table seeds) — fully native and codegen'd sign-random-
+    projection LSH, replayable by ANY engine: the DuckDB oracle
     re-derives every bucket, so multi-table ANN is value-checkable,
     not rows-only. Queries broadcast into each table's bucket join —
     the corpus side never shuffles before the candidate rerank."""

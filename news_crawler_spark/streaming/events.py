@@ -7,8 +7,8 @@ a textbook streaming workload, so the engine provides it:
 
 * tumbling/sliding window aggregates with watermarked late-data
   handling (T1's daily window generalized),
-* sessionization both as a stream (``session_window``) and as the
-  batch window-function form (lag + cumulative gap-count) whose
+* sessionization in the batch window-function form (lag + cumulative
+  gap-count), the exact equivalent of ``session_window``, whose
   results a SQL oracle can verify.
 """
 
@@ -94,22 +94,6 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     return (
         with_prev.withColumn("session_no", F.sum(is_break).over(w_run))
         .select("user_id", "event_id", "ts", "session_no")
-    )
-
-
-def sessionize_stream(spark: SparkSession, parquet_dir: str,
-                      gap: str = "30 minutes") -> DataFrame:
-    """Streaming sessionization via the built-in session_window."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-        .load(parquet_dir)
-    )
-    return (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total"))
-        .select("user_id", F.col("sw.start").alias("s_start"),
-                F.col("sw.end").alias("s_end"), "n_events", "total")
     )
 
 

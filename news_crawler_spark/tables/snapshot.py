@@ -17,9 +17,25 @@ from Iceberg:
   after a kill re-pins each state table to the snapshot ids recorded
   in the last complete lineage row (SURVEY.md §7.2 M5).
 
-On a real cluster this module is swapped for Iceberg catalog tables;
-the engine code only uses the four methods of :class:`SnapshotTable`,
-so the swap is mechanical.
+Every commit goes through one private step, ``SnapshotTable._publish``
+(next manifest = parent's dirs + new dirs, or new dirs alone for an
+overwrite; then the ``CURRENT`` pointer write that ``rollback`` also
+uses). The exactly-once protocol over several tables lives here too,
+as two functions that the crawl engine and both ingest states call:
+
+* :func:`commit_lineage` — after a round's / batch's data appends,
+  append one lineage row carrying each state table's current snapshot
+  id (a ``{column: table}`` pin map) plus the caller's counters;
+* :func:`resume_lineage` — re-pin every mapped table to the last
+  lineage row by the owner's order column (``round`` / ``seq``), or to
+  empty when none committed, so a torn append is rolled back.
+
+On a real cluster this module is swapped for Iceberg catalog tables.
+State code uses seven methods of :class:`SnapshotTable` — ``read``,
+``append``, ``append_dir``, ``append_rows``, ``overwrite``,
+``current_snapshot`` and ``rollback`` (the last three through the
+lineage functions) — plus ``merge_insert`` (an anti-join + append) and
+the ``data_dir`` path the crawl stages into, so the swap is mechanical.
 
 Layout::
 
@@ -34,7 +50,8 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -62,45 +79,42 @@ class SnapshotTable:
         with open(os.path.join(self.manifest_dir, f"{snapshot_id:08d}.json")) as f:
             return json.load(f)
 
-    def _publish(self, manifest: dict) -> int:
-        """Atomically publish a manifest and advance CURRENT."""
-        sid = manifest["id"]
+    def _new_dir(self) -> str:
+        """Data dir for the next snapshot's files."""
+        return os.path.join(self.data_dir, f"snap-{self.current_snapshot() + 1:08d}"
+                                           f"-{uuid.uuid4().hex[:8]}")
+
+    def _write_data(self, df: DataFrame) -> str:
+        d = self._new_dir()
+        df.write.mode("overwrite").parquet(d)
+        return d
+
+    def _publish(self, dirs: list[str], replace: bool = False) -> int:
+        """The one commit step: build the next manifest (the parent's
+        dirs plus ``dirs``, or ``dirs`` alone when ``replace``), publish
+        it atomically and advance CURRENT. Returns the new snapshot id."""
+        parent = self.current_snapshot()
+        sid = parent + 1
+        kept = [] if replace or parent < 0 else self._manifest(parent)["dirs"]
         path = os.path.join(self.manifest_dir, f"{sid:08d}.json")
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            json.dump({"id": sid, "parent": parent, "dirs": [*kept, *dirs]}, f)
         os.replace(tmp, path)
-        cur_tmp = os.path.join(self.manifest_dir, f"CURRENT.tmp-{uuid.uuid4().hex}")
-        with open(cur_tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
+        self.rollback(sid)
         return sid
-
-    def _write_data(self, df: DataFrame, sid: int) -> str:
-        d = os.path.join(self.data_dir, f"snap-{sid:08d}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(d)
-        return d
 
     # -- operations ------------------------------------------------------
     def append(self, df: DataFrame) -> int:
         """Atomic append; returns the new snapshot id."""
-        parent = self.current_snapshot()
-        sid = parent + 1
-        d = self._write_data(df, sid)
-        dirs = self._manifest(parent)["dirs"] if parent >= 0 else []
-        return self._publish({"id": sid, "parent": parent, "dirs": [*dirs, d]})
+        return self._publish([self._write_data(df)])
 
     def append_dir(self, path: str | list[str]) -> int:
         """Adopt one or more already-written parquet directories as a
         single append — zero-copy commit (the round's staging write IS
         the data file; Iceberg's add_files analog). Files may carry
         extra columns; reads project this table's schema."""
-        paths = [path] if isinstance(path, str) else list(path)
-        parent = self.current_snapshot()
-        sid = parent + 1
-        dirs = self._manifest(parent)["dirs"] if parent >= 0 else []
-        return self._publish({"id": sid, "parent": parent,
-                              "dirs": [*dirs, *paths]})
+        return self._publish([path] if isinstance(path, str) else list(path))
 
     _PA_TYPES = {
         "integer": "int32", "long": "int64", "string": "string",
@@ -141,19 +155,14 @@ class SnapshotTable:
         table = pa.table(
             {f.name: list(c) for f, c in zip(pa_schema, cols)},
             schema=pa_schema)
-        parent = self.current_snapshot()
-        sid = parent + 1
-        d = os.path.join(self.data_dir, f"snap-{sid:08d}-{uuid.uuid4().hex[:8]}")
+        d = self._new_dir()
         os.makedirs(d, exist_ok=True)
         pq.write_table(table, os.path.join(d, "part-00000.parquet"))
-        dirs = self._manifest(parent)["dirs"] if parent >= 0 else []
-        return self._publish({"id": sid, "parent": parent, "dirs": [*dirs, d]})
+        return self._publish([d])
 
     def overwrite(self, df: DataFrame) -> int:
-        parent = self.current_snapshot()
-        sid = parent + 1
-        d = self._write_data(df, sid)
-        return self._publish({"id": sid, "parent": parent, "dirs": [d]})
+        """Atomic replace of the whole row set; returns the new snapshot id."""
+        return self._publish([self._write_data(df)], replace=True)
 
     def merge_insert(self, df: DataFrame, key: str | list[str]) -> int:
         """MERGE INTO ... WHEN NOT MATCHED THEN INSERT (reference D5/D6).
@@ -177,28 +186,44 @@ class SnapshotTable:
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(*dirs)
 
-    def read_snapshot_delta(self, snapshot_id: int | None = None) -> DataFrame:
-        """Only the rows added by a snapshot (default: current) —
-        the append's data dirs minus the parent's."""
-        sid = self.current_snapshot() if snapshot_id is None else snapshot_id
-        if sid < 0:
-            return self.spark.createDataFrame([], self.schema)
-        m = self._manifest(sid)
-        parent_dirs = set(self._manifest(m["parent"])["dirs"]) if m["parent"] >= 0 else set()
-        new_dirs = [d for d in m["dirs"] if d not in parent_dirs]
-        if not new_dirs:
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(*new_dirs)
-
     def rollback(self, snapshot_id: int) -> None:
-        """Re-pin CURRENT to an earlier snapshot (resume path)."""
+        """Atomically point CURRENT at ``snapshot_id`` (-1: empty
+        table). Resume re-pins with it; :meth:`_publish` advances with
+        it."""
+        cur = os.path.join(self.manifest_dir, "CURRENT")
         if snapshot_id < 0:
-            cur = os.path.join(self.manifest_dir, "CURRENT")
             if os.path.exists(cur):
                 os.remove(cur)
             return
-        # publish a CURRENT pointing at the old manifest (no new data)
-        tmp = os.path.join(self.manifest_dir, f"CURRENT.tmp-{uuid.uuid4().hex}")
+        tmp = f"{cur}.tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(str(snapshot_id))
-        os.replace(tmp, os.path.join(self.manifest_dir, "CURRENT"))
+        os.replace(tmp, cur)
+
+
+# -- lineage: the commit marker over a set of state tables ----------------
+def commit_lineage(lineage: SnapshotTable, pins: dict[str, SnapshotTable],
+                   **values) -> int:
+    """Append one lineage row — the commit marker, written after every
+    data append it covers. Each ``pins`` column (``{column: table}``)
+    gets its table's current snapshot id; ``values`` fill the other
+    columns. Driver-side (:meth:`SnapshotTable.append_rows`), no Spark
+    job. Returns the lineage snapshot id."""
+    row = {**values, **{col: t.current_snapshot() for col, t in pins.items()}}
+    names = lineage.schema.fieldNames()
+    if set(row) != set(names):
+        raise ValueError(f"lineage row columns {sorted(row)} != schema {names}")
+    return lineage.append_rows([tuple(row[n] for n in names)])
+
+
+def resume_lineage(lineage: SnapshotTable, pins: dict[str, SnapshotTable],
+                   order_col: str) -> Row | None:
+    """Re-pin every ``pins`` table to the snapshot id its column holds
+    in the last lineage row by ``order_col`` — or to empty when no row
+    ever committed. Appends whose lineage row never landed are rolled
+    back, never replayed partially. Returns that row, or None."""
+    rows = lineage.read().orderBy(F.col(order_col).desc()).limit(1).collect()
+    last = rows[0] if rows else None
+    for col, t in pins.items():
+        t.rollback(last[col] if last is not None else -1)
+    return last

@@ -11,7 +11,7 @@ from news_crawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

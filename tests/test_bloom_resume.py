@@ -187,15 +187,29 @@ def test_kill_after_compaction_resumes_cleanly(spark, tmp_path):
     assert log == sorted(oracle.crawl_log)
 
 
-def test_bloom_off_equals_bloom_on(spark, tmp_path):
-    """The bloom is a router, not a semantic: same crawl either way."""
-    a = _mk_engine(spark, str(tmp_path / "a"), use_bloom=True)
-    b = _mk_engine(spark, str(tmp_path / "b"), use_bloom=False)
+def test_bloom_off_equals_bloom_on(spark, tmp_path, monkeypatch):
+    """The bloom is a router, not a semantic: the forced probe path and
+    a default engine, which never probes a crawl this small, crawl the
+    same."""
+    from news_crawler_spark.crawl import engine as engine_mod
+
+    probes = []
+    probe = engine_mod.split_by_bloom
+    monkeypatch.setattr(engine_mod, "split_by_bloom",
+                        lambda *a: probes.append(1) or probe(*a))
     seeds = spark.createDataFrame(seed_rows(CFG), "url string, priority double")
+    a = _mk_engine(spark, str(tmp_path / "a"))
     a.init(seeds)
-    b.init(seeds)
     a.run(3)
+    assert probes, "bloom_min_resolved=0 never took the probe path"
+    probes.clear()
+    b = CrawlEngine(spark, str(tmp_path / "b"),
+                    spark.createDataFrame(host_rows(CFG), HOSTS),
+                    SyntheticFetcher(CFG), seed=CFG.seed,
+                    max_attempts=CFG.max_attempts)
+    b.init(seeds)
     b.run(3)
+    assert not probes, "the default engine probed a tiny crawl"
     la = sorted((r["round"], r.host, r.seq, r.url) for r in a.crawl_log_df().collect())
     lb = sorted((r["round"], r.host, r.seq, r.url) for r in b.crawl_log_df().collect())
     assert la == lb

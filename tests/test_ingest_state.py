@@ -139,32 +139,53 @@ def test_ingest_matches_serial_recompute(spark, tmp_path):
     assert st.fingerprints.read().filter("fp IS NULL").count() == 0
 
 
+STATE_TABLES = ("fingerprints", "bands", "verdicts")
+TORN_ROWS = {
+    "fingerprints": [("deadbeef" * 8, 999)],
+    "bands": [(999, 0, "torn")],
+    "verdicts": [("b2", 999, "new", None)],
+}
+
+
+def _row_counts(st):
+    return {name: getattr(st, name).read().count() for name in STATE_TABLES}
+
+
+def _torn_append(spark, st, names):
+    """Data appends of a killed ingest: no lineage row follows."""
+    for name in names:
+        t = getattr(st, name)
+        t.append(spark.createDataFrame(TORN_ROWS[name], t.schema))
+
+
 def test_ingest_kill_resume_and_idempotent_replay(spark, tmp_path):
-    """A torn ingest (state appends landed, lineage row didn't) rolls
-    back on resume; the re-ingested batch then produces the exact
-    serial-model verdicts. Re-submitting a committed batch_id replays
-    stored verdicts without touching state."""
+    """Torn-write matrix for the ingest commit protocol: a kill can
+    leave any of the three data appends written without the lineage
+    row. Each torn state (one table alone, then all three) rolls back
+    on resume to the committed row counts; re-ingesting the torn batch
+    then produces the exact serial-model verdicts, and re-submitting a
+    committed batch_id replays stored verdicts without touching state.
+    Torn appends into a fresh state dir (no lineage row at all) resume
+    to empty tables."""
+    import shutil
+
     want = serial_model()
-    root = str(tmp_path / "state")
-    st = DedupState(spark, root)
+    base = str(tmp_path / "base")
+    st = DedupState(spark, base)
     st.ingest(_df(spark, "b0"), "b0")
     st.ingest(_df(spark, "b1"), "b1")
+    committed = _row_counts(st)
 
-    # simulate a kill mid-ingest of b2: bands + fingerprints appended,
-    # verdicts and lineage never landed
-    torn_bands = st.bands.read().limit(3)
-    st.bands.append(torn_bands)
-    st.fingerprints.append(
-        spark.createDataFrame([("deadbeef" * 8, 999)],
-                              st.fingerprints.schema))
-    band_rows_torn = st.bands.read().count()
+    scenarios = [(name,) for name in STATE_TABLES] + [STATE_TABLES]
+    for i, torn_tables in enumerate(scenarios):
+        state = str(tmp_path / f"s{i}")
+        shutil.copytree(base, state)
+        _torn_append(spark, DedupState(spark, state), torn_tables)
+        st2 = DedupState(spark, state)   # fresh process
+        assert st2.resume() == 2, f"scenario {torn_tables}"
+        assert _row_counts(st2) == committed, f"scenario {torn_tables}"
 
-    st2 = DedupState(spark, root)   # fresh process
-    assert st2.resume() == 2        # two complete batches
-    assert st2.bands.read().count() < band_rows_torn
-    assert (st2.fingerprints.read()
-            .filter("doc_id = 999").count()) == 0
-
+    # continue from the all-tables scenario
     got = _got(st2.ingest(_df(spark, "b2"), "b2"))
     assert got == want["b2"]
 
@@ -178,6 +199,12 @@ def test_ingest_kill_resume_and_idempotent_replay(spark, tmp_path):
     assert snaps == (st2.fingerprints.current_snapshot(),
                      st2.bands.current_snapshot(),
                      st2.verdicts.current_snapshot())
+
+    fresh = str(tmp_path / "fresh")
+    _torn_append(spark, DedupState(spark, fresh), STATE_TABLES)
+    st3 = DedupState(spark, fresh)
+    assert st3.resume() == 0
+    assert _row_counts(st3) == dict.fromkeys(STATE_TABLES, 0)
 
 
 def test_ingest_exact_dups_skip_shingling(spark, tmp_path):

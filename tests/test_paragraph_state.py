@@ -83,19 +83,43 @@ def test_paragraph_state_equals_batch_operator_single_batch(spark,
     assert got == want
 
 
+STATE_TABLES = ("paragraphs", "verdicts")
+TORN_ROWS = {
+    "paragraphs": [("deadbeef", 999, 0)],
+    "verdicts": [("b2", 999, 1, 1, 1.0)],
+}
+
+
+def _row_counts(st):
+    return {name: getattr(st, name).read().count() for name in STATE_TABLES}
+
+
+def _torn_append(spark, st, names):
+    """Data appends of a killed ingest: no lineage row follows."""
+    for name in names:
+        t = getattr(st, name)
+        t.append(spark.createDataFrame(TORN_ROWS[name], t.schema))
+
+
 def test_paragraph_state_kill_resume_and_replay(spark, tmp_path):
-    st, got = _ingest_all(spark, tmp_path / "kr", order=("b0", "b1"))
-    n_state = st.paragraphs.read().count()
+    """Torn-write matrix: each data append alone, then both, written
+    without a lineage row, must roll back on resume to the committed
+    row counts; replay and continuation then stay bit-exact. Torn
+    appends into a fresh state dir resume to empty tables."""
+    import shutil
 
-    # torn write: paragraphs appended but no lineage row landed
-    torn = spark.createDataFrame(
-        [("deadbeef", 999, 0)], "fp string, doc_id long, pos int")
-    st.paragraphs.append(torn)
-    assert st.paragraphs.read().count() == n_state + 1
+    st, _ = _ingest_all(spark, tmp_path / "kr", order=("b0", "b1"))
+    committed = _row_counts(st)
+    n_state = committed["paragraphs"]
 
-    st2 = ParagraphState(spark, str(tmp_path / "kr"))
-    assert st2.resume() == 2  # two committed batches
-    assert st2.paragraphs.read().count() == n_state  # rollback
+    scenarios = [(name,) for name in STATE_TABLES] + [STATE_TABLES]
+    for i, torn_tables in enumerate(scenarios):
+        state = str(tmp_path / f"s{i}")
+        shutil.copytree(tmp_path / "kr", state)
+        _torn_append(spark, ParagraphState(spark, state), torn_tables)
+        st2 = ParagraphState(spark, state)
+        assert st2.resume() == 2, f"scenario {torn_tables}"
+        assert _row_counts(st2) == committed, f"scenario {torn_tables}"
 
     # idempotent replay: b1 again returns committed verdicts, no growth
     df = spark.createDataFrame(BATCHES["b1"], "doc_id long, text string")
@@ -111,6 +135,12 @@ def test_paragraph_state_kill_resume_and_replay(spark, tmp_path):
             for r in st2.ingest(df2, "b2").collect()}
     wantf, _ = _serial(("b0", "b1", "b2"))
     assert got2 == {d: wantf[d] for d in got2}
+
+    fresh = str(tmp_path / "fresh")
+    _torn_append(spark, ParagraphState(spark, fresh), STATE_TABLES)
+    st3 = ParagraphState(spark, fresh)
+    assert st3.resume() == 0
+    assert _row_counts(st3) == dict.fromkeys(STATE_TABLES, 0)
 
 
 def test_paragraph_state_compact_preserves_state(spark, tmp_path):
